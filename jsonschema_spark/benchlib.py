@@ -9,7 +9,7 @@ import os
 from pyspark.sql import functions as F
 
 from jsonschema_spark.sources.corpus import MAX_TOKENS, VOCAB_SIZE, corpus, dim_source
-from jsonschema_spark.plans.plan import TableSpec, compile_table_spec
+from jsonschema_spark.plans.plan import TableSpec, compile_table_spec, verdict_counts
 from jsonschema_spark.plans.job import ValidationJob
 
 CORPUS_SPEC_DICT = {
@@ -49,12 +49,8 @@ def corpus_validation_pass(spark, corpus_path: str):
     plan = compile_table_spec(TableSpec.from_dict(CORPUS_SPEC_DICT), df.schema)
     job = ValidationJob(plan, dims={"dim_source": dim_source(spark)})
     annotated = job.annotate(df)
-    checks = job.check_columns(annotated)
     row = annotated.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("_valid").cast("long")).alias("n_valid"),
-        F.sum("n_tok").alias("n_tokens"),
-        *[F.sum((~F.col(c)).cast("long")).alias(c) for c in checks],
+        *verdict_counts(annotated), F.sum("n_tok").alias("n_tokens")
     ).collect()[0]
     n_dups = job.uniqueness(df)["doc_id"].count()
     return row.n_rows, row.n_valid, row.n_tokens or 0, n_dups

@@ -775,6 +775,7 @@ def sampled_validation_gate(
     """
     from jsonschema_spark.functions.text import portable_hash60
     from jsonschema_spark.operators.dedup import ensure_parallelism
+    from jsonschema_spark.plans.plan import is_valid
 
     prio = portable_hash60(
         F.concat(F.lit("vgate:"), F.col(id_col).cast("string"))
@@ -790,7 +791,7 @@ def sampled_validation_gate(
     ann = annotate(sample)
     agg = ann.agg(
         F.count(F.lit(1)).cast("long").alias("n_sampled"),
-        F.sum((~F.col("_valid")).cast("long")).alias("n_fail"),
+        F.sum((~is_valid()).cast("long")).alias("n_fail"),
     )
     n = F.col("n_sampled").cast("double")
     p = F.col("n_fail") / n

@@ -39,7 +39,27 @@ from jsonschema_spark.operators import drift as drift_ops
 from jsonschema_spark.operators import stats as stats_ops
 from jsonschema_spark.operators.referential import domain_flag, orphan_key_counts
 from jsonschema_spark.operators.uniqueness import duplicate_keys
-from jsonschema_spark.plans.plan import CompiledPlan
+from jsonschema_spark.plans.plan import (
+    CompiledPlan,
+    annotation_columns,
+    check_column,
+    check_columns,
+    check_failures,
+    failed_checks,
+    is_valid,
+    kernel_verdict,
+    verdict_counts,
+    with_valid,
+)
+
+
+def _unit_column() -> Column:
+    """The resume unit of a row: its input file when reading files (stable
+    across reruns), else its spark partition id."""
+    return F.coalesce(
+        F.nullif(F.input_file_name(), F.lit("")),
+        F.concat(F.lit("partition:"), F.spark_partition_id().cast("string")),
+    )
 
 
 def drop_completed_units(annotated: DataFrame, done_units: DataFrame) -> DataFrame:
@@ -49,15 +69,7 @@ def drop_completed_units(annotated: DataFrame, done_units: DataFrame) -> DataFra
     literal list would inline potentially millions of path strings into
     the plan (tests/test_corpus_pipeline.py pins the join shape)."""
     return (
-        annotated.withColumn(
-            "_unit",
-            F.coalesce(
-                F.nullif(F.input_file_name(), F.lit("")),
-                F.concat(
-                    F.lit("partition:"), F.spark_partition_id().cast("string")
-                ),
-            ),
-        )
+        annotated.withColumn("_unit", _unit_column())
         .join(
             F.broadcast(done_units.select("unit")),
             F.col("_unit") == F.col("unit"),
@@ -93,12 +105,13 @@ class ValidationJob:
             dim = self.dims.get(ref["dim"])
             if dim is None:
                 raise ValueError(f"missing dimension table {ref['dim']!r}")
-            out = domain_flag(out, col_name, dim, ref["key"], f"chk_ref_{col_name}")
-            out = out.withColumn("_valid", F.col("_valid") & F.col(f"chk_ref_{col_name}"))
-        return out
+            out = domain_flag(
+                out, col_name, dim, ref["key"], check_column(f"ref_{col_name}")
+            )
+        return with_valid(out) if self.plan.references else out
 
     def check_columns(self, annotated: DataFrame) -> list:
-        return [c for c in annotated.columns if c.startswith("chk_")]
+        return check_columns(annotated)
 
     def violations(
         self, annotated: DataFrame, sample_fraction: float | None = None
@@ -115,15 +128,13 @@ class ValidationJob:
         on the id (NOT rand(): reproducible across retries/resume) keeps
         the per-check *counts* exact in lineage while bounding the itemized
         rows written."""
-        checks = self.check_columns(annotated)
         if sample_fraction is not None and sample_fraction < 1.0:
             threshold = int(sample_fraction * 1_000_000)
             annotated = annotated.filter(
                 F.pmod(F.xxhash64(F.col(self.id_column), F.lit(7)), F.lit(1_000_000))
                 < threshold
             )
-        detail = getattr(self.plan, "detail", None) or {}
-        detail_specs = getattr(self.plan, "detail_specs", None) or {}
+        detail_specs = self.plan.detail_specs
         items = []
 
         def entry(name: str, path: str) -> Column:
@@ -138,10 +149,9 @@ class ValidationJob:
                 ),
             )
 
-        kernel_verdicts = getattr(self.plan, "kernel_verdicts", None) or {}
-        for c in checks:
-            name = c.removeprefix("chk_")
-            named = detail.get(name)
+        for name, failed in check_failures(annotated).items():
+            named = self.plan.detail.get(name)
+            v = kernel_verdict(annotated, name)
             if named:
                 # one candidate entry per path; the per-path predicate is
                 # evaluated in the same stage (input columns are still
@@ -150,13 +160,12 @@ class ValidationJob:
                     items.append(
                         F.when(~F.coalesce(pred, F.lit(False)), entry(name, path))
                     )
-            elif name in kernel_verdicts and f"_verdict_{name}" in annotated.columns:
+            elif v is not None:
                 # kernel checks carry the evaluator's own error location:
                 # path/keyword/message from the materialized verdict struct
-                v = F.col(f"_verdict_{name}")
                 items.append(
                     F.when(
-                        ~F.col(c),
+                        failed,
                         F.struct(
                             F.lit(name).alias("check"),
                             F.coalesce(v.getField("first_path"), F.lit("")).alias(
@@ -171,7 +180,7 @@ class ValidationJob:
                     )
                 )
             else:
-                items.append(F.when(~F.col(c), entry(name, "")))
+                items.append(F.when(failed, entry(name, "")))
         entries = F.filter(F.array(*items), lambda x: x.isNotNull())
         # dynamic map keys (patternProperties/additionalProperties over
         # arbitrary keys): the plan carries a runtime array of failing
@@ -185,7 +194,7 @@ class ValidationJob:
                 x.getField("detail").alias("detail"),
             )
 
-        for name, arr in (getattr(self.plan, "detail_dynamic", None) or {}).items():
+        for name, arr in self.plan.detail_dynamic.items():
             entries = F.concat(entries, F.transform(arr, _tag(name)))
         return (
             annotated.select(F.col(self.id_column).alias("id"), entries.alias("failed"))
@@ -214,54 +223,23 @@ class ValidationJob:
         scan-stage projection — no shuffle, no second pass; the
         failed-check array is the in-stage filter(array(when...)) idiom
         violations() uses, bounded by |checks|."""
-        checks = self.check_columns(annotated)
-        drop = checks + ["_valid"] + [
-            c for c in annotated.columns if c.startswith("_verdict_")
-        ]
-        accepted = annotated.filter(F.col("_valid")).drop(*drop)
-        failed = F.filter(
-            F.array(
-                *[
-                    F.when(
-                        ~F.coalesce(F.col(c), F.lit(False)),
-                        F.lit(c.removeprefix("chk_")),
-                    )
-                    for c in checks
-                ]
-            ),
-            lambda x: x.isNotNull(),
-        )
+        drop = annotation_columns(annotated)
+        failed = failed_checks(annotated)
         payload = [c for c in annotated.columns if c not in set(drop)]
-        quarantined = (
-            annotated.filter(~F.col("_valid"))
-            .select(
-                *payload,
-                F.size(failed).alias("n_failed"),
-                F.array_join(F.array_sort(failed), ",").alias(
-                    "failed_checks"
-                ),
-            )
+        accepted = annotated.filter(is_valid()).drop(*drop)
+        quarantined = annotated.filter(~is_valid()).select(
+            *payload,
+            F.size(failed).alias("n_failed"),
+            F.array_join(failed, ",").alias("failed_checks"),
         )
         return accepted, quarantined
 
-    def partition_lineage(self, annotated: DataFrame, unit: str = "auto") -> DataFrame:
+    def partition_lineage(self, annotated: DataFrame) -> DataFrame:
         """Per-unit pass/fail + per-check fail counts. Unit = input file name
         when present (stable across reruns → resumable), else partition id."""
-        checks = self.check_columns(annotated)
-        if unit == "auto":
-            unit_col = F.coalesce(
-                F.nullif(F.input_file_name(), F.lit("")),
-                F.concat(F.lit("partition:"), F.spark_partition_id().cast("string")),
-            )
-        else:
-            unit_col = F.col(unit)
-        aggs = [
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("_valid").cast("long")).alias("n_valid"),
-        ]
-        for c in checks:
-            aggs.append(F.sum((~F.col(c)).cast("long")).alias(f"fail_{c.removeprefix('chk_')}"))
-        return annotated.groupBy(unit_col.alias("unit")).agg(*aggs)
+        return annotated.groupBy(_unit_column().alias("unit")).agg(
+            *verdict_counts(annotated)
+        )
 
     # ---- table-level checks --------------------------------------------------
 

@@ -118,26 +118,101 @@ class CompiledPlan:
     def check_names(self) -> list:
         return list(self.checks) + list(self.kernel_checks)
 
-    def annotate(self, df: DataFrame, prefix: str = "chk_") -> DataFrame:
-        """df + one boolean column per check + `_valid` conjunction. Kernel
-        checks with a verdict struct land as `_verdict_<name>` + the
-        derived boolean — the kernel runs ONCE for both."""
+    def annotate(self, df: DataFrame) -> DataFrame:
+        """df + one boolean check column per check + the `_valid`
+        conjunction (see the verdict-frame helpers below). Kernel checks
+        with a verdict struct land as `_verdict_<name>` + the derived
+        boolean — the kernel runs ONCE for both."""
         out = df
-        valid = F.lit(True)
         for name, pred in self.checks.items():
-            out = out.withColumn(prefix + name, pred)
-            valid = valid & F.col(prefix + name)
+            out = out.withColumn(check_column(name), pred)
         for name, pred in self.kernel_checks.items():
             verdict = self.kernel_verdicts.get(name)
             if verdict is not None:
-                out = out.withColumn(f"_verdict_{name}", verdict)
-                out = out.withColumn(
-                    prefix + name, F.col(f"_verdict_{name}").getField("valid")
-                )
-            else:
-                out = out.withColumn(prefix + name, pred)
-            valid = valid & F.col(prefix + name)
-        return out.withColumn("_valid", valid)
+                out = out.withColumn(_VERDICT + name, verdict)
+                pred = F.col(_VERDICT + name).getField("valid")
+            out = out.withColumn(check_column(name), pred)
+        return with_valid(out)
+
+
+# ---- the verdict frame ---------------------------------------------------
+#
+# An annotated frame is the input plus one boolean `chk_<check>` column per
+# check, a `_verdict_<check>` struct per kernel check that reports its own
+# error location, and the `_valid` conjunction. This module is the only one
+# that spells those names: every reader goes through the helpers below, and
+# all of them count a NULL verdict as a failure (reject on unknown, the
+# reference's fail-fast accept/reject, validate.go:15-21).
+
+_CHECK = "chk_"
+_VERDICT = "_verdict_"
+_VALID = "_valid"
+
+
+def check_column(name: str) -> str:
+    """Column name of check ``name`` in an annotated frame."""
+    return _CHECK + name
+
+
+def check_columns(df: DataFrame) -> list:
+    """The check columns of an annotated frame, in frame order."""
+    return [c for c in df.columns if c.startswith(_CHECK)]
+
+
+def _passed(col_name: str) -> Column:
+    return F.coalesce(F.col(col_name), F.lit(False))
+
+
+def check_failures(df: DataFrame) -> dict:
+    """check name -> Column that is true when the row fails that check (a
+    NULL verdict fails), in frame order."""
+    return {c.removeprefix(_CHECK): ~_passed(c) for c in check_columns(df)}
+
+
+def with_valid(df: DataFrame) -> DataFrame:
+    """(Re)compute `_valid` as the conjunction of every check column."""
+    valid = F.lit(True)
+    for c in check_columns(df):
+        valid = valid & _passed(c)
+    return df.withColumn(_VALID, valid)
+
+
+def is_valid() -> Column:
+    """The row verdict of an annotated frame; a NULL `_valid` rejects."""
+    return _passed(_VALID)
+
+
+def failed_checks(df: DataFrame) -> Column:
+    """Sorted array of the names of the checks a row fails — evaluated in
+    the scan stage, bounded by the number of checks."""
+    failures = check_failures(df)
+    return F.filter(
+        F.array(*[F.when(failures[n], F.lit(n)) for n in sorted(failures)]),
+        lambda x: x.isNotNull(),
+    )
+
+
+def verdict_counts(df: DataFrame) -> list:
+    """Aggregate columns ``n_rows``, ``n_valid`` and one ``fail_<check>``
+    per check (frame order) — the lineage / window summary shape."""
+    return [
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(is_valid().cast("long")).alias("n_valid"),
+    ] + [
+        F.sum(failed.cast("long")).alias(f"fail_{name}")
+        for name, failed in check_failures(df).items()
+    ]
+
+
+def kernel_verdict(df: DataFrame, name: str) -> Optional[Column]:
+    """The materialized verdict struct of kernel check ``name``, if any."""
+    col_name = _VERDICT + name
+    return F.col(col_name) if col_name in df.columns else None
+
+
+def annotation_columns(df: DataFrame) -> list:
+    """Every column annotation added — strip these to recover the payload."""
+    return [c for c in df.columns if c.startswith((_CHECK, _VERDICT)) or c == _VALID]
 
 
 def compile_table_spec(spec: TableSpec, schema: T.StructType) -> CompiledPlan:

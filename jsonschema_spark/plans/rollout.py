@@ -21,15 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_spark.plans.plan import CompiledPlan
-
-
-def _strip_annotation(df: DataFrame, prefix: str = "chk_") -> list:
-    return [
-        c
-        for c in df.columns
-        if c.startswith(prefix) or c.startswith("_verdict_")
-    ]
+from jsonschema_spark.plans.plan import (
+    CompiledPlan,
+    annotation_columns,
+    check_failures,
+    failed_checks,
+    is_valid,
+)
 
 
 def spec_rollout_audit(
@@ -51,12 +49,10 @@ def spec_rollout_audit(
     and don't belong in a per-row transition matrix.
     """
     a = old_plan.annotate(df)
-    a = a.withColumnRenamed("_valid", "_valid_old").drop(
-        *_strip_annotation(a)
-    )
-    b = new_plan.annotate(a).withColumnRenamed("_valid", "_valid_new")
-    old_v = F.col("_valid_old")
-    new_v = F.col("_valid_new")
+    a = a.withColumn("_old_ok", is_valid()).drop(*annotation_columns(a))
+    b = new_plan.annotate(a)
+    old_v = F.col("_old_ok")
+    new_v = is_valid()
 
     def _n(cond) -> F.Column:
         return F.sum(cond.cast("long"))
@@ -106,22 +102,21 @@ def check_activation_profile(
     the per-check unpivot is a ``stack()`` over that one row,
     metadata-sized at any corpus size.
     """
-    checks = sorted(c for c in annotated.columns if c.startswith("chk_"))
-    if not checks:
-        raise ValueError("no chk_* columns: annotate the frame first")
-    aggs = [F.count(F.lit(1)).alias("_n")] + [
-        F.sum((~F.coalesce(F.col(c), F.lit(False))).cast("long")).alias(
-            f"_f_{c}"
-        )
-        for c in checks
-    ]
-    one = annotated.agg(*aggs)
-    stack = ", ".join(
-        f"'{c.removeprefix('chk_')}', `_f_{c}`" for c in checks
+    failures = check_failures(annotated)
+    if not failures:
+        raise ValueError("no check columns: annotate the frame first")
+    names = sorted(failures)
+    one = annotated.agg(
+        F.count(F.lit(1)).alias("_n"),
+        *[
+            F.sum(failures[n].cast("long")).alias(f"_f{i}")
+            for i, n in enumerate(names)
+        ],
     )
+    stack = ", ".join(f"'{n}', `_f{i}`" for i, n in enumerate(names))
     return (
         one.selectExpr(
-            "_n", f"stack({len(checks)}, {stack}) AS (`check`, n_fail)"
+            "_n", f"stack({len(names)}, {stack}) AS (`check`, n_fail)"
         )
         .select(
             "check",
@@ -164,21 +159,9 @@ def violation_examples(
     """
     from jsonschema_spark.functions.text import portable_hash60
 
-    checks = sorted(c for c in annotated.columns if c.startswith("chk_"))
-    if not checks:
-        raise ValueError("no chk_* columns: annotate the frame first")
-    failed = F.filter(
-        F.array(
-            *[
-                F.when(
-                    ~F.coalesce(F.col(c), F.lit(False)),
-                    F.lit(c.removeprefix("chk_")),
-                )
-                for c in checks
-            ]
-        ),
-        lambda x: x.isNotNull(),
-    )
+    if not check_failures(annotated):
+        raise ValueError("no check columns: annotate the frame first")
+    failed = failed_checks(annotated)
     from pyspark.sql import Window
 
     pairs = (
@@ -232,18 +215,7 @@ def violation_cooccurrence(
     expansion of a per-row array bounded by the number of CHECKS (not
     data), and the final aggregate's key space is ≤ checks² rows.
     """
-    checks = sorted(
-        c for c in annotated.columns if c.startswith("chk_")
-    )
-    failed = F.filter(
-        F.array(
-            *[
-                F.when(~F.coalesce(F.col(c), F.lit(False)), F.lit(c.removeprefix("chk_")))
-                for c in checks
-            ]
-        ),
-        lambda x: x.isNotNull(),
-    )
+    failed = failed_checks(annotated)
     # unordered pairs via index-pairing over the (≤ #checks)-element array;
     # flatten(transform(transform)) stays a native HOF — no explode of a
     # Python product, no join

@@ -129,37 +129,29 @@ def _corpus_checks_from(
     """Shared verdict assembly for the packed passes: every check except
     the token-content one is identical native SQL."""
     from jsonschema_spark.operators.referential import domain_flag
+    from jsonschema_spark.plans.plan import check_column, with_valid
     from jsonschema_spark.sources.corpus import dim_source
 
-    annotated = (
-        df.withColumn(
-            "chk_col_doc_id",
-            F.coalesce(F.col("doc_id").rlike("^doc-[0-9]{12}$"), F.lit(False)),
+    checks = {
+        "col_doc_id": F.col("doc_id").rlike("^doc-[0-9]{12}$"),
+        "col_tokens": bounds_ok_col,
+        "col_n_tok": (F.col("n_tok") >= 1) & (F.col("n_tok") <= max_tokens),
+        "required_doc_id": F.col("doc_id").isNotNull(),
+        "required_tokens": tokens_present,
+        "required_n_tok": F.col("n_tok").isNotNull(),
+        "required_source": F.col("source").isNotNull(),
+        "row_len_consistent": F.col("n_tok") * TOKEN_BYTES == len_col,
+    }
+    annotated = df
+    for name, pred in checks.items():
+        annotated = annotated.withColumn(
+            check_column(name), F.coalesce(pred, F.lit(False))
         )
-        .withColumn("chk_col_tokens", F.coalesce(bounds_ok_col, F.lit(False)))
-        .withColumn(
-            "chk_col_n_tok",
-            F.col("n_tok").isNotNull()
-            & (F.col("n_tok") >= 1)
-            & (F.col("n_tok") <= max_tokens),
-        )
-        .withColumn("chk_required_doc_id", F.col("doc_id").isNotNull())
-        .withColumn("chk_required_tokens", tokens_present)
-        .withColumn("chk_required_n_tok", F.col("n_tok").isNotNull())
-        .withColumn("chk_required_source", F.col("source").isNotNull())
-        .withColumn(
-            "chk_row_len_consistent",
-            F.coalesce(F.col("n_tok") * TOKEN_BYTES == len_col, F.lit(False)),
-        )
-    )
     annotated = domain_flag(
-        annotated, "source", dim_source(df.sparkSession), "source_id", "chk_ref_source"
+        annotated, "source", dim_source(df.sparkSession), "source_id",
+        check_column("ref_source"),
     )
-    checks = [c for c in annotated.columns if c.startswith("chk_")]
-    valid = F.lit(True)
-    for c in checks:
-        valid = valid & F.col(c)
-    return annotated.withColumn("_valid", valid)
+    return with_valid(annotated)
 
 
 def packed_stats_validation_pass(spark: SparkSession, packed_path: str):
@@ -175,6 +167,7 @@ def packed_stats_validation_pass(spark: SparkSession, packed_path: str):
 
     Returns (n_rows, n_valid, n_tokens, n_dups)."""
     from jsonschema_spark.operators.uniqueness import duplicate_keys
+    from jsonschema_spark.plans.plan import verdict_counts
     from jsonschema_spark.sources.corpus import MAX_TOKENS, VOCAB_SIZE
 
     df = spark.read.parquet(packed_path)
@@ -191,9 +184,7 @@ def packed_stats_validation_pass(spark: SparkSession, packed_path: str):
         MAX_TOKENS,
     )
     row = annotated.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("_valid").cast("long")).alias("n_valid"),
-        F.sum("n_tok").alias("n_tokens"),
+        *verdict_counts(annotated), F.sum("n_tok").alias("n_tokens")
     ).collect()[0]
     n_dups = duplicate_keys(df.select("doc_id"), "doc_id").count()
     return row.n_rows, row.n_valid, row.n_tokens or 0, n_dups
@@ -214,6 +205,7 @@ def packed_validation_pass(spark: SparkSession, packed_path: str):
     Returns (n_rows, n_valid, n_tokens, n_dups).
     """
     from jsonschema_spark.operators.uniqueness import duplicate_keys
+    from jsonschema_spark.plans.plan import verdict_counts
     from jsonschema_spark.sources.corpus import MAX_TOKENS, VOCAB_SIZE
 
     df = spark.read.parquet(packed_path)
@@ -227,9 +219,7 @@ def packed_validation_pass(spark: SparkSession, packed_path: str):
         MAX_TOKENS,
     )
     row = annotated.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("_valid").cast("long")).alias("n_valid"),
-        F.sum("n_tok").alias("n_tokens"),
+        *verdict_counts(annotated), F.sum("n_tok").alias("n_tokens")
     ).collect()[0]
     n_dups = duplicate_keys(df, "doc_id").count()
     return row.n_rows, row.n_valid, row.n_tokens or 0, n_dups

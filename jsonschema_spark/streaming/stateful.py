@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from jsonschema_spark.plans.plan import is_valid
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("n_rows", T.LongType()),
@@ -39,7 +41,7 @@ def _update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
     n_rows, n_invalid = state.get if state.exists else (0, 0)
     for pdf in pdfs:
         n_rows += len(pdf)
-        n_invalid += int((~pdf["_valid"]).sum())
+        n_invalid += int((~pdf["valid"]).sum())
     state.update((n_rows, n_invalid))
     yield pd.DataFrame(
         {
@@ -53,10 +55,10 @@ def _update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
 
 def running_source_counters(annotated_stream: DataFrame) -> DataFrame:
     """Stateful running (n_rows, n_invalid, rate) per source over an
-    annotated validation stream (requires the `_valid` column from
+    annotated validation stream (requires the row verdict from
     annotate_stream). Output mode: update."""
     return (
-        annotated_stream.select("source", "_valid")
+        annotated_stream.select("source", is_valid().alias("valid"))
         .groupBy("source")
         .applyInPandasWithState(
             _update,

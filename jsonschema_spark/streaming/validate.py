@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jsonschema_spark.plans.job import ValidationJob
-from jsonschema_spark.plans.plan import CompiledPlan
+from jsonschema_spark.plans.plan import CompiledPlan, failed_checks, verdict_counts
 
 
 def annotate_stream(
@@ -48,31 +48,20 @@ def windowed_verdicts(
     """Tumbling-window verdict summary: (window, n_rows, n_valid,
     fail_<check>...). Watermark bounds state and admits late data up to the
     horizon; output mode `append` emits each window once it closes."""
-    checks = [c for c in annotated.columns if c.startswith("chk_")]
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("_valid").cast("long")).alias("n_valid"),
-    ] + [
-        F.sum((~F.col(c)).cast("long")).alias(f"fail_{c.removeprefix('chk_')}")
-        for c in checks
-    ]
     return (
         annotated.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window).alias("window"))
-        .agg(*aggs)
+        .agg(*verdict_counts(annotated))
     )
 
 
 def stream_violations(annotated: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Violation rows (id, check) for failing rows only — append-mode safe
     (stateless filter + explode)."""
-    checks = [c for c in annotated.columns if c.startswith("chk_")]
-    entries = F.filter(
-        F.array(*[F.when(~F.col(c), F.lit(c.removeprefix("chk_"))) for c in checks]),
-        lambda x: x.isNotNull(),
-    )
     return (
-        annotated.select(F.col(id_col).alias("id"), entries.alias("failed"))
+        annotated.select(
+            F.col(id_col).alias("id"), failed_checks(annotated).alias("failed")
+        )
         .filter(F.size("failed") > 0)
         .select("id", F.explode("failed").alias("check"))
     )
